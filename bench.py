@@ -20,7 +20,8 @@ hypervisor-steal percentage ("steal_pct"), so a host-degraded number is
 attributable per row without a side-channel journal.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PAGES (default 400000),
+SPARK_GRAFT_CPUS (default: the cores this process may run on),
+SPARK_GRAFT_PAGES (default 400000),
 SPARK_GRAFT_BENCH_QUERIES=0 to skip the per-query section (scaling runs).
 """
 
@@ -37,7 +38,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from opentelemetry_collector_contrib_spark import synth  # noqa: E402
 from opentelemetry_collector_contrib_spark.plans import runner  # noqa: E402
-from opentelemetry_collector_contrib_spark.session import get_spark  # noqa: E402
+from opentelemetry_collector_contrib_spark.session import (  # noqa: E402
+    default_parallelism, get_spark,
+)
 
 HEADLINE_QUERIES = [
     "parse_extract",
@@ -55,7 +58,7 @@ HEADLINE_QUERIES = [
     "dedup_ngram_jaccard_stopgram",
     "dedup_minhash_lsh",
     "dedup_simhash_banded",
-    # block-GEMM verify is the scale path (see tools/bench_neardup.py);
+    # block-GEMM verify is the scale path;
     # the UDF-free banded sibling stays a correctness query
     "embedding_neardup_blocked",
     "ann_topk",
@@ -126,7 +129,7 @@ class _StealMeter:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_parallelism()
     n_pages = int(os.environ.get("SPARK_GRAFT_PAGES", "400000"))
     run_queries = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "1") == "1"
     sf = sf_dir.rstrip("/").split("sf")[-1]

@@ -239,157 +239,36 @@ def parse_html(html: pd.Series) -> pd.DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Arrow-native parse path (the default hot path)
-# ---------------------------------------------------------------------------
-
-# RE2 syntax (pyarrow compute): every capture must be named for
-# extract_regex; (?s) = dotall. Semantics match the Python patterns above
-# for these constructs (non-greedy, anchors, char classes) — byte-identity
-# is asserted by tests/test_parse.py and the driver contract.
-_ARROW_TITLE = r"(?s)<title>(?P<g>.*?)</title>"
-_ARROW_STATUS = r'http-equiv="status" content="(?P<g>\d+)"'
-_ARROW_PRE = r"(?s)<pre>(?P<g>.*?)</pre>"
-_ARROW_A = r"(?s)^(?P<t>\d{4}-\d{2}-\d{2}) (?P<sev>[A-Z0-9]*) (?P<msg>.*)$"
-_ARROW_B = (
-    r"(?s)^(?P<t>\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(?:\.\d+)?Z)"
-    r" (?P<st>stdout|stderr) (?P<tok>[^ ]*) ?(?P<msg>.*)$"
-)
-
-_ARROW_PARSE_SCHEMA = (
-    "url string, warc_ts timestamp, text string, lang string, "
-    "title string, status int, body string, a_time string, a_sev string, "
-    "a_msg string, b_time string, b_stream string, b_msg string, "
-    "is_c boolean"
-)
-
-
-def _parse_arrow_batches(batches):
-    """mapInArrow worker: html bytes -> extracted fields, all in pyarrow
-    compute (RE2, C++-vectorized). Compared to the pandas UDF this avoids
-    materializing one Python str object per page — the dominant memory
-    traffic of the parse stage at width (see BENCH.md round-2 scaling
-    analysis). Batches whose html is not valid UTF-8 fall back to a
-    pandas-decode (synth pages are always valid)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def g(struct_arr, field):
-        return pc.struct_field(struct_arr, field)
-
-    for batch in batches:
-        arr = batch.column("html")
-        try:
-            s = arr.cast(pa.string())
-        except pa.ArrowInvalid:
-            decoded = (
-                batch.column("html").to_pandas().str.decode("utf-8", errors="replace")
-            )
-            s = pa.Array.from_pandas(decoded)
-        title = g(pc.extract_regex(s, _ARROW_TITLE), "g")
-        status = g(pc.extract_regex(s, _ARROW_STATUS), "g").cast(pa.int32())
-        body = pc.coalesce(g(pc.extract_regex(s, _ARROW_PRE), "g"), pa.scalar(""))
-        ea = pc.extract_regex(body, _ARROW_A)
-        eb = pc.extract_regex(body, _ARROW_B)
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("url"),
-                batch.column("warc_ts"),
-                batch.column("text"),
-                batch.column("lang"),
-                title,
-                status,
-                body,
-                g(ea, "t"), g(ea, "sev"), g(ea, "msg"),
-                g(eb, "t"), g(eb, "st"), g(eb, "msg"),
-                pc.starts_with(body, "{"),
-            ],
-            [
-                "url", "warc_ts", "text", "lang", "title", "status", "body",
-                "a_time", "a_sev", "a_msg", "b_time", "b_stream", "b_msg",
-                "is_c",
-            ],
-        )
-
-
-def parse_stage(pages: DataFrame, engine: str = "pandas") -> DataFrame:
+def parse_stage(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> parsed log records.
 
-    engine="pandas" (default): the ArrowEvalPython pandas-UDF path — only
+    The one parse path: the ArrowEvalPython pandas UDF ``parse_html``. Only
     the ``html`` column crosses into the Python worker; Spark joins the
-    struct result back positionally. engine="arrow": a mapInArrow variant
-    running pyarrow/RE2 extraction C++-side with per-format routing and
-    the JSON parse (from_json = the stanza json_parser) JVM-side;
-    byte-identical output (asserted in tests) but measured ~25% slower
-    because mapInArrow must round-trip the passthrough columns (url,
-    warc_ts, text, lang) through the worker, while the pandas UDF ships
-    html alone — see BENCH.md round-2 parse A/B. The golden ``text``
-    column rides along so tests can assert byte-identity; production reads
-    would simply not select it (column pruning keeps it out of the scan).
+    struct result back positionally and derives everything else JVM-side.
+    The golden ``text`` column rides along so tests can assert
+    byte-identity; production reads would simply not select it (column
+    pruning keeps it out of the scan).
     """
-    if engine == "pandas":
-        df = pages.withColumn("p", parse_html(F.col("html")))
-        sev_txt, sev_num = severity_columns(F.col("p.severity_text"))
-        return df.select(
-            "url",
-            "warc_ts",
-            "text",
-            "lang",
-            *url_metadata(F.col("url")),
-            F.col("p.title").alias("title"),
-            F.col("p.fmt").alias("fmt"),
-            F.col("p.event_time").alias("event_time"),
-            F.coalesce(
-                F.try_to_timestamp(F.col("p.event_time"), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")),
-                F.try_to_timestamp(F.col("p.event_time"), F.lit("yyyy-MM-dd")),
-            ).alias("event_ts"),
-            F.col("p.severity_text").alias("severity_in"),
-            sev_txt.alias("severity_text"),
-            sev_num.alias("severity_number"),
-            F.col("p.stream").alias("stream"),
-            F.col("p.message").alias("message"),
-            F.col("p.status").alias("status"),
-            F.col("p.parse_ok").alias("parse_ok"),
-        )
-
-    m = pages.select("url", "warc_ts", "text", "lang", "html").mapInArrow(
-        _parse_arrow_batches, _ARROW_PARSE_SCHEMA
-    )
-    a_ok = F.col("a_time").isNotNull() & ~F.col("is_c")
-    b_ok = F.col("b_time").isNotNull() & ~F.col("is_c") & ~a_ok
-    # stanza json_parser (otel-collector-config.yml:40-45): a real JSON
-    # parse JVM-side; validity via get_json_object on the root path
-    # (from_json is PERMISSIVE: all-null struct on bad input)
-    cj = F.from_json(F.col("body"), "log STRING, stream STRING, time STRING")
-    c_ok = F.col("is_c") & F.get_json_object(F.col("body"), "$").isNotNull()
-    event_time = (
-        F.when(a_ok, F.col("a_time"))
-        .when(b_ok, F.col("b_time"))
-        .when(c_ok, cj.getField("time"))
-    )
-    severity_in = F.when(a_ok, F.col("a_sev"))
-    sev_txt, sev_num = severity_columns(severity_in)
-    return m.select(
+    df = pages.withColumn("p", parse_html(F.col("html")))
+    sev_txt, sev_num = severity_columns(F.col("p.severity_text"))
+    return df.select(
         "url",
         "warc_ts",
         "text",
         "lang",
         *url_metadata(F.col("url")),
-        "title",
-        F.when(a_ok, "A").when(b_ok, "B").when(c_ok, "C").alias("fmt"),
-        event_time.alias("event_time"),
+        F.col("p.title").alias("title"),
+        F.col("p.fmt").alias("fmt"),
+        F.col("p.event_time").alias("event_time"),
         F.coalesce(
-            F.try_to_timestamp(event_time, F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")),
-            F.try_to_timestamp(event_time, F.lit("yyyy-MM-dd")),
+            F.try_to_timestamp(F.col("p.event_time"), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")),
+            F.try_to_timestamp(F.col("p.event_time"), F.lit("yyyy-MM-dd")),
         ).alias("event_ts"),
-        severity_in.alias("severity_in"),
+        F.col("p.severity_text").alias("severity_in"),
         sev_txt.alias("severity_text"),
         sev_num.alias("severity_number"),
-        F.when(b_ok, F.col("b_stream")).when(c_ok, cj.getField("stream")).alias("stream"),
-        F.when(a_ok, F.col("a_msg"))
-        .when(b_ok, F.col("b_msg"))
-        .when(c_ok, cj.getField("log"))
-        .alias("message"),
-        "status",
-        (a_ok | b_ok | c_ok).alias("parse_ok"),
+        F.col("p.stream").alias("stream"),
+        F.col("p.message").alias("message"),
+        F.col("p.status").alias("status"),
+        F.col("p.parse_ok").alias("parse_ok"),
     )

@@ -11,7 +11,7 @@ sampler must be
   failed partition — must admit exactly the same documents.  ``rand()``
   is neither (per-task seeds change with partitioning), so the decision
   is a pure hash of the document id: ``md5(salt || id) mod 1e6 <
-  floor(rate * 1e6)``.  Changing ``salt`` draws an independent sample;
+  round(rate * 1e6)``.  Changing ``salt`` draws an independent sample;
   keeping it fixes the sample forever.
 - **a map-only stage**: no shuffle, no state — the filter composes with
   the parquet scan and pushes the rate decision to every executor
@@ -42,11 +42,13 @@ DENOM = 1_000_000
 
 
 def _thresholds(rates: dict[str, float], default_rate: float) -> tuple[dict[str, int], int]:
-    """Integer admission thresholds (floor(rate * 1e6)) — computed once
-    driver-side so Spark and any oracle share the exact literal."""
+    """Integer admission thresholds (rate in millionths, rounded so a
+    decimal rate such as 0.000249 is not truncated to 248 by binary float
+    error) — computed once driver-side so Spark and any oracle share the
+    exact literal."""
     return (
-        {k: int(v * DENOM) for k, v in rates.items()},
-        int(default_rate * DENOM),
+        {k: int(round(v * DENOM)) for k, v in rates.items()},
+        int(round(default_rate * DENOM)),
     )
 
 
@@ -58,7 +60,7 @@ def stratified_sample(
     id_col: str = "doc_id",
     salt: str = "mix",
 ) -> DataFrame:
-    """Admit each row iff hash(salt || id) mod 1e6 < floor(rate[stratum]
+    """Admit each row iff hash(salt || id) mod 1e6 < round(rate[stratum]
     * 1e6).  Adds ``hash_bucket`` (the row's position in the hash space)
     so downstream audits can verify the decision without re-hashing."""
     thr, dflt = _thresholds(rates, default_rate)
@@ -82,8 +84,10 @@ def stratified_sample_sql(
 ) -> str:
     """DuckDB twin admitting the byte-identical document set."""
     thr, dflt = _thresholds(rates, default_rate)
+    keys = {k: k.replace("'", "''") for k in thr}
     cases = " ".join(
-        f"WHEN {stratum_col} = '{k}' THEN {t}" for k, t in sorted(thr.items())
+        f"WHEN {stratum_col} = '{keys[k]}' THEN {t}"
+        for k, t in sorted(thr.items())
     )
     h = md5_int_sql(f"CAST({id_col} AS VARCHAR)", salt=salt)
     return (
@@ -108,6 +112,9 @@ def mixture_rates(
     only by the map-only sampler itself.
     """
     total_target = sum(targets.values())
+    if total_target <= 0:
+        # no target mass (empty or all-zero targets): nothing to sample
+        return {k: 0.0 for k in targets}
     shares = {k: v / total_target for k, v in targets.items()}
     # a positive-target stratum with no data makes the mixture infeasible
     # at any size — every rate collapses to 0 rather than KeyError/div0

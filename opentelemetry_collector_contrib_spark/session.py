@@ -20,8 +20,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+def driver_memory() -> str:
+    """SPARK_DRIVER_MEM, else min(32g, half of physical RAM): a heap larger
+    than the box never has to collect and gets the JVM OOM-killed."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f
+                      if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "32g"
+    return f"{min(32 * 1024, kb // 2048)}m"
 
 
 def get_spark(
@@ -49,7 +66,9 @@ def get_spark(
         # per python invocation, so whole-Series vectorization is intact
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
+        # Python workers import this package too, wherever the run starts
+        .config("spark.executorEnv.PYTHONPATH", REPO_ROOT)
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
     )

@@ -19,7 +19,7 @@ TABLES = [
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("otelcol-spark-tests", cores=8, shuffle_partitions=8)
+    s = get_spark("otelcol-spark-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

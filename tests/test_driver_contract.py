@@ -61,6 +61,22 @@ QUERY_NAMES = sorted(entrymod.queries().keys()) + sorted(
 )
 
 
+def test_registry_pairs_every_query_with_one_oracle():
+    """JVM-free: each registry name appears once (a repeat would silently
+    replace a query or its oracle in the dict views), each query has
+    exactly one non-empty oracle, no oracle lacks a query, and no name is
+    both driver-checked and demoted."""
+    names = [row[0] for row in entrymod.REGISTRY]
+    assert len(names) == len(set(names))
+    live, demoted = entrymod.queries(), entrymod.demoted_queries()
+    assert not set(live) & set(demoted)
+    for qs, oracles in ((live, entrymod.oracle_sql()),
+                        (demoted, entrymod.demoted_oracle_sql())):
+        assert list(oracles) == list(qs)
+        assert all(isinstance(sql, str) and sql.strip()
+                   for sql in oracles.values())
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, duck01, name):
     q = {**entrymod.queries(), **entrymod.demoted_queries()}[name]

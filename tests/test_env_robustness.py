@@ -13,20 +13,25 @@ at every scale factor — the divergence was environmental:
 
 These tests reproduce both perturbations and assert the contract still
 holds: the queries() wrapper must pin the session timezone itself, and no
-oracle may expose a HUGEINT column.
+oracle may expose a HUGEINT column. The session factory must also fit its
+JVM heap into the box and let Python workers import the package from any
+working directory.
 """
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
+from opentelemetry_collector_contrib_spark import session
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -90,3 +95,40 @@ def test_wrapper_repins_utc(spark):
     spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
     entrymod.queries()["filter_range"](spark, SF_DIR)
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_default_heap_fits_in_physical_memory(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo") as f:
+        total_mb = next(int(ln.split()[1]) for ln in f
+                        if ln.startswith("MemTotal:")) // 1024
+    heap = session.driver_memory()
+    assert heap.endswith("m") and 0 < int(heap[:-1]) <= total_mb
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert session.driver_memory() == "3g"
+
+
+_OUTSIDE_REPO = """
+import sys
+sys.path.insert(0, {root!r})
+from opentelemetry_collector_contrib_spark.session import get_spark
+import __spark_entry__ as entrymod
+spark = get_spark("outside-repo", cores=1, shuffle_partitions=1)
+rows = entrymod.queries()["parse_extract"](spark, {sf!r}).select(
+    "message").collect()
+print("ROWS", len(rows))
+spark.stop()
+"""
+
+
+def test_pandas_udf_query_runs_outside_repo_dir():
+    """Python workers start in the caller's working directory; the session
+    must put the package on their path, not just the driver's."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_DRIVER_MEM="1g", PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_REPO.format(root=ROOT, sf=SF_DIR)],
+        cwd="/tmp", env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert int(proc.stdout.split("ROWS")[1]) > 0

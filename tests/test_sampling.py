@@ -89,11 +89,13 @@ def test_sample_plan_is_map_only_and_pruned(spark):
 
 
 def test_mixture_rates_infeasible_stratum_collapses_to_zero():
-    # a positive-target stratum with no data -> the mixture is
-    # unachievable at any corpus size; every rate is 0, no exception
-    rates = sampling.mixture_rates(
-        {"en": 1000}, {"en": 0.5, "missing": 0.5})
-    assert rates == {"en": 0.0, "missing": 0.0}
+    # a positive-target stratum with no data makes the mixture
+    # unachievable at any corpus size, and empty or all-zero targets have
+    # no mass to share out; every rate is 0, no exception
+    for targets in ({"en": 0.5, "missing": 0.5}, {},
+                    {"en": 0.0, "missing": 0.0}):
+        rates = sampling.mixture_rates({"en": 1000}, targets)
+        assert rates == {k: 0.0 for k in targets}
 
 
 # ---------------------------------------------------------------------------
@@ -102,29 +104,41 @@ def test_mixture_rates_infeasible_stratum_collapses_to_zero():
 
 import hashlib
 
-from hypothesis import HealthCheck, given, settings
+import duckdb
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 ids_st = st.lists(st.integers(0, 10**9), min_size=1, max_size=30,
                   unique=True)
-rate_st = st.sampled_from([0.0, 0.1, 0.317, 0.5, 0.999, 1.0])
+# 0.000249 * 1e6 is 248.99999999999997 in binary floating point
+rate_st = st.sampled_from([0.0, 0.000249, 0.1, 0.317, 0.5, 0.999, 1.0])
 
 
 def _admit_model(doc_id: int, rate: float, salt: str) -> bool:
     h = int(hashlib.md5(f"{salt}{doc_id}".encode()).hexdigest()[:15], 16)
-    return h % 1_000_000 < int(rate * 1_000_000)
+    return h % 1_000_000 < round(rate * 1_000_000)
 
 
 @settings(max_examples=10, deadline=None,
           suppress_health_check=list(HealthCheck))
 @given(ids_st, rate_st, rate_st)
+# doc 2485945 hashes (salt "p") to bucket 248: admitted at rate 0.000249
+# only if the threshold is the rate's exact millionths
+@example(ids=[2485945], rate_en=0.000249, rate_default=0.0)
 def test_admission_matches_hashlib_model(spark, ids, rate_en, rate_default):
-    rows = [(i, "en" if i % 2 else "de") for i in ids]
+    # the stratum key carries a quote, which the SQL twin must escape
+    rows = [(i, "e'n" if i % 2 else "de") for i in ids]
+    rates = {"e'n": rate_en}
     df = spark.createDataFrame(rows, "doc_id long, lang string")
     got = {r["doc_id"] for r in sampling.stratified_sample(
-        df, "lang", {"en": rate_en}, default_rate=rate_default,
-        salt="p").collect()}
+        df, "lang", rates, default_rate=rate_default, salt="p").collect()}
     expect = {i for i, lang in rows
-              if _admit_model(i, rate_en if lang == "en" else rate_default,
+              if _admit_model(i, rate_en if lang == "e'n" else rate_default,
                               "p")}
     assert got == expect
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, lang VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    sql = sampling.stratified_sample_sql(
+        "docs", "lang", rates, default_rate=rate_default, salt="p")
+    assert {r[0] for r in con.execute(sql).fetchall()} == expect

@@ -1,8 +1,7 @@
 """Fleet-mode scaling evidence: N executors vs 4N as 4 INDEPENDENT
 8-core-pinned Spark processes on disjoint core sets.
 
-Why this exists: the interleaved local[8]→local[32] campaign
-(tools/bench_scaling.py) conflates three things on this host — engine
+Why this exists: an interleaved local[8]→local[32] campaign conflates three things on this host — engine
 scaling, local-mode's single shared JVM feeding 32 Python workers, and
 a host personality that burst-serves narrow pinned runs ~2× beyond
 what the CPU/memory probes predict while crushing wide runs.  A real
@@ -17,9 +16,9 @@ fleet ratio is attributable to the box (and carries per-process
 steal% from bench.py to prove it), while a clean one is the north
 rule's number with the local-mode tax removed.
 
-Levels are interleaved (solo, fleet, solo, fleet, ...) for the same
-reason bench_scaling.py interleaves: adjacent-in-time samples are the
-only fair comparison on a drifting host.
+Levels are interleaved (solo, fleet, solo, fleet, ...) because
+adjacent-in-time samples are the only fair comparison on a drifting
+host.
 
 Usage: python tools/bench_fleet.py [n_pages_per_process] [trials]
 """
