@@ -24,7 +24,9 @@ so the cumsum is embarrassingly parallel after one hash shuffle on
 shard, and block ids are made globally unique as (shard, local block).
 Document order within a shard is by document id — deterministic under
 any physical partitioning, so reruns and resumes produce byte-identical
-packing (same reproducibility contract as operators/sampling.py).
+packing (same reproducibility contract as operators/sampling.py). Rows
+that share an id within a shard are ordered by token count: rows equal on
+both produce the same output rows in either order.
 
 Reference framing: the collector's batch processor
 (SURVEY §2.7 flush-on-count) regroups a row stream into fixed-size
@@ -57,25 +59,23 @@ def pack_token_blocks(
     Empty documents (0 tokens) occupy only their sentinel; their span is
     defined as the single position of their start offset.
     """
-    w = Window.partitionBy(shard_col).orderBy(id_col) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     n = F.col(tokens_col).cast("long")
-    # offsets are per-SHARD, and a shard fits one task, so stream offsets
-    # stay far below 2^53 — the long->double->long block division below
-    # is exact in that range
+    w = Window.partitionBy(shard_col).orderBy(id_col, n) \
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     start = (F.sum(n + F.lit(sep_tokens)).over(w) - (n + F.lit(sep_tokens)))
     # last token position; empty docs collapse to their start position
     end = start + F.greatest(n, F.lit(1)) - F.lit(1)
+    first = F.call_function("div", start, F.lit(block_size))
+    last = F.call_function("div", end, F.lit(block_size))
     return docs.select(
         F.col(shard_col).alias("shard"),
         F.col(id_col).alias("id"),
         n.alias("n_tokens"),
         start.alias("stream_start"),
-        (start / block_size).cast("long").alias("first_block"),
-        (end / block_size).cast("long").alias("last_block"),
+        first.alias("first_block"),
+        last.alias("last_block"),
         (start % block_size).alias("offset_in_first_block"),
-        ((end / block_size).cast("long") - (start / block_size).cast("long")
-         + F.lit(1)).alias("n_blocks_spanned"),
+        (last - first + F.lit(1)).alias("n_blocks_spanned"),
     )
 
 
@@ -95,7 +95,8 @@ WITH t AS (
          -- DuckDB SUM(BIGINT) widens to HUGEINT; cast back so every
          -- oracle column stays pyarrow-convertible (test_env_robustness)
          CAST(SUM(CAST({tokens_expr} AS BIGINT) + {sep_tokens}) OVER (
-             PARTITION BY {shard_col} ORDER BY {id_col}
+             PARTITION BY {shard_col}
+             ORDER BY {id_col}, CAST({tokens_expr} AS BIGINT)
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
          ) - (CAST({tokens_expr} AS BIGINT) + {sep_tokens}) AS BIGINT)
              AS stream_start

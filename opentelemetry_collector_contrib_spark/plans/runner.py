@@ -6,7 +6,7 @@ replacing the reference's goroutine topology
 Topology reproduced:
 
   pages (Iceberg/parquet scan, column-pruned)
-    -> parse (router + regex/json extraction, one Arrow pandas UDF)
+    -> parse (router + substring/regex/json extraction, JVM-only)
     -> enrich (broadcast lookup join on domain + constant resource attrs)
     -> route tag (predicate lanes + value table + default)
     -> [metrics: accepted/refused/dropped/routed, single tagged-plan pass]

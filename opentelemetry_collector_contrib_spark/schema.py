@@ -36,21 +36,6 @@ LOG_RECORD_SCHEMA = T.StructType(
     ]
 )
 
-# Output of the parse stage (functions/parse.py): the struct a vectorized
-# pandas UDF returns for each page.
-PARSED_STRUCT = T.StructType(
-    [
-        T.StructField("title", T.StringType(), True),
-        T.StructField("fmt", T.StringType(), True),  # 'A' | 'B' | 'C' | None
-        T.StructField("event_time", T.StringType(), True),
-        T.StructField("severity_text", T.StringType(), True),
-        T.StructField("stream", T.StringType(), True),
-        T.StructField("message", T.StringType(), True),  # byte-identical extracted text
-        T.StructField("status", T.IntegerType(), True),
-        T.StructField("parse_ok", T.BooleanType(), False),
-    ]
-)
-
 # Enrichment dimension (FIXTURES.md F3, k8sprocessor analogue
 # processor/k8sprocessor/kube/client.go:204-258).
 DOMAIN_INFO_SCHEMA = T.StructType(

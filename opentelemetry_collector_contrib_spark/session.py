@@ -6,8 +6,10 @@ local testing:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) —
   replaces the reference's hand-tuned worker pools
   (internal/stanza/converter.go:155-174).
-- Arrow on — all Python UDFs in this engine are vectorized pandas UDFs
-  (per BASELINE.json input_hint: "no per-row Python").
+- Arrow on — the Python UDFs in this engine (source decoders, multimodal
+  metadata) are vectorized pandas UDFs or ``mapInArrow`` (per
+  BASELINE.json input_hint: "no per-row Python"); the pipeline's parse
+  stage runs none.
 - shuffle partitions sized from cores locally; on a real cluster this would
   be ~2-3x total executor cores (or left to AQE coalescing from a high
   initial value).
@@ -58,12 +60,13 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 2000 rows (~4 MB of html per batch) instead of the previous
-        # 10000: interleaved 32-wide probes show identical warm
+        # 2000 rows per Arrow batch instead of the previous 10000: on the
+        # html-parse pandas UDF the pipeline used to run (~4 MB of html
+        # per batch), interleaved 32-wide probes showed identical warm
         # throughput but a 3-7x better cold first pass (large batches
         # spike allocation on first materialization — 46 s vs 7 s worst
-        # case) and tighter run-to-run variance; still thousands of rows
-        # per python invocation, so whole-Series vectorization is intact
+        # case); still thousands of rows per python invocation, so
+        # whole-Series vectorization is intact for the remaining UDFs
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_memory())

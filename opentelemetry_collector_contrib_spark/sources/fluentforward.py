@@ -16,9 +16,8 @@ Reference: receiver/fluentforwardreceiver/conversion.go —
 
 The wire format is binary msgpack — there is no vectorized expression for
 a variable-length self-describing framing, so decode is a per-event pure-
-Python loop inside an Arrow-batched pandas UDF (the same honest posture as
-json.loads in parse_html: transfer and scheduling are columnar, the codec
-itself is the per-row cost). One event decodes to potentially many log
+Python loop inside an Arrow-batched pandas UDF: transfer and scheduling
+are columnar, the codec itself is the per-row cost. One event decodes to potentially many log
 rows (Forward/PackedForward), returned as an array column and exploded
 JVM-side so the fan-out itself stays columnar.
 

@@ -114,16 +114,18 @@ sys.path.insert(0, {root!r})
 from opentelemetry_collector_contrib_spark.session import get_spark
 import __spark_entry__ as entrymod
 spark = get_spark("outside-repo", cores=1, shuffle_partitions=1)
-rows = entrymod.queries()["parse_extract"](spark, {sf!r}).select(
-    "message").collect()
+rows = entrymod.queries()["multimodal_decode"](spark, {sf!r}).select(
+    "kind").collect()
 print("ROWS", len(rows))
 spark.stop()
 """
 
 
-def test_pandas_udf_query_runs_outside_repo_dir():
+def test_python_worker_query_runs_outside_repo_dir():
     """Python workers start in the caller's working directory; the session
-    must put the package on their path, not just the driver's."""
+    must put the package on their path, not just the driver's.
+    ``multimodal_decode`` runs a ``mapInArrow`` function of the package, so
+    its workers must import it."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.update(SPARK_DRIVER_MEM="1g", PYSPARK_PYTHON=sys.executable)
     proc = subprocess.run(
