@@ -3,7 +3,7 @@
 Headline metric (BASELINE.json): end-to-end parse -> enrich -> route ->
 aggregate throughput in docs/sec over the Common-Crawl-style pages table.
 Pages are materialized to parquet once (untimed), then the timed job reads
-them back — so the measured path is scan -> pandas-UDF parse -> broadcast
+them back — so the measured path is scan -> JVM-only parse -> broadcast
 enrich -> route tag -> fan-out write + two grouped aggregates, exactly the
 production DAG.
 

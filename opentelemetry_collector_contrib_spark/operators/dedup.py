@@ -12,9 +12,19 @@ Scale design notes (the part that matters at 10^12 docs):
   - ngram-jaccard: the gram self-join explodes on hot grams; production use
     pairs it with a stop-gram filter (drop grams in > F docs) — exposed via
     ``max_doc_freq``. Shuffle keys are gram hashes (well-spread).
-  - minhash LSH: signatures are k grouped mins (map-side combinable);
-    banding turns O(n^2) similarity into equi-join on band keys — the
-    standard scale path. Candidate verification joins back to gram sets.
+  - minhash LSH and contamination read one gram array per document
+    (``_gram_sets``; the token split is its own projection, never inside
+    the ``transform`` lambda). Signatures are k ``array_min``s per row —
+    no explode, no groupBy(doc); banding turns O(n^2) similarity into an
+    equi-join on band keys — the standard scale path. Candidate
+    verification intersects the two gram arrays of each pair.
+  - never ``explode`` or ``filter`` a gram-set column directly above a
+    caller's round-robin repartition (``__spark_entry__._spread``): for
+    ``explode`` of an attribute Catalyst infers ``size(grams) > 0``
+    (InferFiltersFromGenerate) and pushes it, with the whole gram
+    expression inlined, below the exchange into the single-split scan —
+    one task then shingles every document. ``explode_outer`` plus the
+    inner join on the gram drops empty sets instead.
   - simhash: one agg per doc + a hamming-ball self-join on rotated keys
     (here: plain band on the high byte for the oracle-checkable variant).
 """
@@ -68,7 +78,13 @@ def exact_dedup_sql(relation: str, id_col: str, text_col: str) -> str:
 def word_ngrams_expr(text_col: str, n: int = 3) -> str:
     """Distinct word n-gram shingles (array<string>) as a Spark SQL expr.
     Empty array when the text has fewer than n tokens."""
-    toks = f"split({text_col}, ' ')"
+    return _token_ngrams_expr(f"split({text_col}, ' ')", n)
+
+
+def _token_ngrams_expr(toks: str, n: int) -> str:
+    """:func:`word_ngrams_expr` over an expression that is already a token
+    array. Given a column, the ``transform`` lambda reads it instead of
+    re-splitting the text at every position."""
     return (
         f"CASE WHEN size({toks}) >= {n} THEN array_distinct("
         f"transform(sequence(1, size({toks}) - {n - 1}),"
@@ -114,38 +130,40 @@ def _stop_filtered(grams: DataFrame, max_doc_freq: int | None) -> DataFrame:
     )
 
 
+def _gram_sets(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(doc, grams): each document's distinct shingles as one array. The
+    token split is its own projection; Catalyst does not collapse it into
+    the gram expression, which reads it more than once."""
+    toks = docs.select(
+        F.col(id_col).alias("doc"), F.split(F.col(text_col), " ").alias("toks")
+    )
+    return toks.select("doc", F.expr(_token_ngrams_expr("toks", n)).alias("grams"))
+
+
 def jaccard_for_pairs(
-    pairs: DataFrame,
-    grams: DataFrame,
-    sizes: DataFrame,
-    threshold: float,
+    pairs: DataFrame, gram_sets: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact shingle Jaccard computed ONLY for the given candidate pairs.
 
-    ``pairs`` is (doc_a, doc_b); ``grams`` is the exploded (doc, gram) set;
-    ``sizes`` is (doc, sz). The intersection join is keyed by
-    (doc_b, gram) after attaching doc_a's grams to each pair — no stage
-    aggregates the full all-pairs gram join, so the cost is linear in
-    (candidate pairs x grams per doc) instead of quadratic in docs. This is
-    what makes LSH candidate generation actually pay off at 10^12 docs.
+    ``pairs`` is (doc_a, doc_b); ``gram_sets`` is (doc, grams) from
+    :func:`_gram_sets`. Each pair picks up both gram arrays by two
+    equi-joins on the doc id, and the intersection is
+    ``array_intersect`` within the row — no join or aggregation on the
+    gram key, so the cost is linear in (candidate pairs x grams per doc)
+    instead of quadratic in docs. This is what makes LSH candidate
+    generation actually pay off at 10^12 docs. Pairs that share no gram
+    are dropped, as an intersection join would drop them.
     """
-    ga = grams.select(F.col("doc").alias("doc_a"), "gram")
-    gb = grams.select(F.col("doc").alias("doc_b"), "gram")
-    inter = (
-        pairs.join(ga, "doc_a")
-        .join(gb, ["doc_b", "gram"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"))
+    ga = gram_sets.select(F.col("doc").alias("doc_a"), F.col("grams").alias("ga"))
+    gb = gram_sets.select(F.col("doc").alias("doc_b"), F.col("grams").alias("gb"))
+    inter = F.size(F.array_intersect("ga", "gb"))
+    # NULL (dropped by the filter) when nothing is shared, so two empty
+    # sets never divide by zero
+    jaccard = F.when(inter > 0, inter / (F.size("ga") + F.size("gb") - inter))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
+        pairs.join(ga, "doc_a")
+        .join(gb, "doc_b")
+        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
     )
@@ -230,6 +248,25 @@ WHERE i / (sa.sz + sb.sz - i) >= {threshold}
 # ---------------------------------------------------------------------------
 
 
+def minhash_signatures(gram_sets: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc, mh_0 .. mh_{k-1}) from (doc, grams): ``mh_s`` is
+    ``min(md5_int(f"{s}:" || gram))`` over the doc's gram set, NULL for an
+    empty set. One hex-to-integer conversion per (doc, hash): md5 digests
+    are equal-length lowercase hex, so the string minimum is the numeric
+    minimum and its 15-hex prefix is the minimum prefix."""
+
+    def mh(s: int) -> Column:
+        # ``s`` is bound per call. Not ``lambda g, s=s``: transform() passes
+        # the element index as a lambda's second parameter, so ``s`` would
+        # become the index variable, whose name changes with every plan.
+        hex_min = F.array_min(F.transform(
+            "grams", lambda g: F.md5(F.concat(F.lit(f"{s}:"), g).cast("binary"))
+        ))
+        return F.conv(F.substring(hex_min, 1, 15), 16, 10).cast("long").alias(f"mh_{s}")
+
+    return gram_sets.select("doc", *[mh(s) for s in range(num_hashes)])
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str,
@@ -238,38 +275,33 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """shingle -> minhash -> band -> bucket-join -> verify (SURVEY/TASK
     minhash+LSH dedup). Candidates share at least one full band of the
     signature; candidates are then verified against exact shingle Jaccard
     computed ONLY over the candidate pairs.
 
-    ``max_doc_freq`` stop-filters boilerplate shingles before the
-    signatures AND the verification intersections (set sizes stay
-    unfiltered) — without it, a shingle shared by a large doc cohort
-    dominates the min of every signature row and the cohort collapses
-    into one LSH bucket, reintroducing the quadratic candidate blowup.
-    Production minhash at web scale always pairs with this knob.
+    Every stage reads one gram array per document (:func:`_gram_sets`):
+    signature hash ``s`` is one ``array_min`` per (doc, hash) with no
+    explode or groupBy(doc), and verification intersects the two arrays of
+    each candidate pair. A document with fewer than ``n`` tokens has an
+    empty set, NULL signatures and NULL band keys, so it is never a
+    candidate.
     """
     rows = num_hashes // bands
-    raw_grams = _grams_df(docs, id_col, text_col, n)
-    grams = _stop_filtered(raw_grams, max_doc_freq)
-    sig = grams.groupBy("doc").agg(
-        *[
-            F.min(md5_int(F.col("gram"), salt=f"{s}:")).alias(f"mh_{s}")
-            for s in range(num_hashes)
-        ]
-    )
-    # stack() emits all band keys in ONE pass over the signature (no
-    # re-computation of the gram aggregation per band)
+    gram_sets = _gram_sets(docs, id_col, text_col, n)
+    sig = minhash_signatures(gram_sets, num_hashes)
+    # stack() emits all band keys in ONE pass over the signature
     stack_args = []
     for b in range(bands):
         key = ", ':', ".join(f"CAST(mh_{b * rows + r} AS STRING)" for r in range(rows))
         stack_args.append(f"{b}, md5(CAST(concat({key}) AS BINARY))")
+    # shuffled once on the join keys: both sides of the self-join then read
+    # the same exchange (ReusedExchange) instead of each recomputing every
+    # signature
     banded = sig.selectExpr(
         "doc", f"stack({bands}, {', '.join(stack_args)}) AS (band, bucket)"
-    )
+    ).repartition("band", "bucket")
     cand = (
         banded.alias("x")
         .join(banded.alias("y"), ["band", "bucket"])
@@ -279,10 +311,8 @@ def minhash_lsh_pairs(
     )
     # verify candidates with exact jaccard restricted to the candidate
     # pairs — never the full-corpus all-pairs truth (that would reintroduce
-    # the quadratic cost LSH exists to avoid); intersections use the
-    # stop-filtered grams, sizes the raw sets (ngram_jaccard_pairs parity)
-    sizes = raw_grams.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    return jaccard_for_pairs(cand, grams, sizes, threshold)
+    # the quadratic cost LSH exists to avoid)
+    return jaccard_for_pairs(cand, gram_sets, threshold)
 
 
 def minhash_lsh_pairs_sql(
@@ -293,8 +323,10 @@ def minhash_lsh_pairs_sql(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    max_doc_freq: int | None = None,
 ) -> str:
+    """DuckDB twin of :func:`minhash_lsh_pairs`: exploded grams, grouped
+    minima, and the all-pairs truth joined to the candidates — the
+    independent formulation the array plan is checked against."""
     rows = num_hashes // bands
     mh_cols = ", ".join(
         f"MIN({md5_int_sql('gram', f'{s}:')}) AS mh_{s}" for s in range(num_hashes)
@@ -308,18 +340,9 @@ def minhash_lsh_pairs_sql(
             f"SELECT doc, {b} AS band, md5({key}) AS bucket FROM sig"
         )
     banded = " UNION ALL ".join(band_selects)
-    stop_cte = ""
-    joinable = "g"
-    if max_doc_freq is not None:
-        stop_cte = (
-            "keep AS (SELECT gram FROM g GROUP BY gram"
-            f" HAVING COUNT(*) <= {max_doc_freq}),\n"
-            "gj AS (SELECT g.doc, g.gram FROM g JOIN keep USING (gram)),\n"
-        )
-        joinable = "gj"
     return f"""
 WITH g AS ({_grams_sql(relation, id_col, text_col, n)}),
-{stop_cte}sig AS (SELECT doc, {mh_cols} FROM {joinable} GROUP BY doc),
+sig AS (SELECT doc, {mh_cols} FROM g GROUP BY doc),
 banded AS ({banded}),
 cand AS (
   SELECT DISTINCT x.doc AS doc_a, y.doc AS doc_b
@@ -329,7 +352,7 @@ cand AS (
 sz AS (SELECT doc, COUNT(*) AS sz FROM g GROUP BY doc),
 inter AS (
   SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS i
-  FROM {joinable} a JOIN {joinable} b ON a.gram = b.gram AND a.doc < b.doc
+  FROM g a JOIN g b ON a.gram = b.gram AND a.doc < b.doc
   GROUP BY 1, 2
 ),
 truth AS (
@@ -660,15 +683,21 @@ def contamination_flags(
     the 10^12-row corpus never shuffles on the gram key.  Docs with no
     hit keep n_hit_grams = 0 via the left join against the hit table
     (itself keyed by doc id — the natural partitioning).
+
+    Both sides explode their gram sets with ``explode_outer`` (a plain
+    ``explode`` would push an inferred filter into the scan; see the
+    module docstring); the inner join on ``gram`` drops the NULL rows of
+    empty sets.
     """
     bench_text = bench_text_col or text_col
-    doc_grams = _grams_df(docs, id_col, text_col, n)
-    bench_grams = (
-        benchmark.select(
-            F.explode(F.expr(word_ngrams_expr(bench_text, n))).alias("gram")
-        )
-        .distinct()
-    )
+
+    def grams(df: DataFrame, doc: str, text: str) -> DataFrame:
+        sets = _gram_sets(df, doc, text, n)
+        return sets.select("doc", F.explode_outer("grams").alias("gram"))
+
+    doc_grams = grams(docs, id_col, text_col)
+    # benchmark ids are never read: its text stands in as the (pruned) doc key
+    bench_grams = grams(benchmark, bench_text, bench_text).select("gram").distinct()
     hits = (
         doc_grams.join(F.broadcast(bench_grams), "gram")
         .groupBy("doc")

@@ -6,16 +6,18 @@ These tests pin the round-2 fixes:
   - the anchor-pruned embedding near-dup must be result-identical to the
     exact all-pairs join (its prune is a no-false-negative triangle-
     inequality filter, not probabilistic LSH);
-  - the stop-gram knob must actually change the gram join input.
+  - the stop-gram knob must actually change the gram join input;
+  - the gram-set plans of minhash and contamination tokenize once, push
+    no gram filter below the round-robin spread, and share the band
+    exchange; minhash signatures equal a hashlib model.
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import re
-
-from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.operators import dedup, similarity
 
@@ -162,15 +164,115 @@ def test_ivf_trained_multiprobe_recall(spark):
 
 
 def test_jaccard_for_pairs_restricts_to_given_pairs(spark):
+    """Only the given pairs are verified (the 1-3 and 2-3 pairs share a
+    gram too), from their gram arrays; a pair sharing no gram is dropped
+    even at threshold 0."""
     docs = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a b c e"), (3, "a b c f")],
+        [(1, "a b c d"), (2, "a b c e"), (3, "a b c f"), (4, "x y z")],
         "doc_id LONG, text STRING",
     )
-    grams = dedup._grams_df(docs, "doc_id", "text", 3)
-    sizes = grams.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-    pairs = spark.createDataFrame([(1, 2)], "doc_a LONG, doc_b LONG")
-    out = dedup.jaccard_for_pairs(pairs, grams, sizes, threshold=0.0).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in out} == {(1, 2)}
+    gram_sets = dedup._gram_sets(docs, "doc_id", "text", 3)
+    pairs = spark.createDataFrame([(1, 2), (1, 4)], "doc_a LONG, doc_b LONG")
+    out = dedup.jaccard_for_pairs(pairs, gram_sets, threshold=0.0).collect()
+    # {abc, bcd} vs {abc, bce}: 1 shared of 3
+    assert {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in out} == {
+        (1, 2): round(1 / 3, 6)
+    }
+
+
+def _md5_int_model(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def test_minhash_signature_matches_hashlib_model(spark):
+    """Signature value s of a doc is the minimum 60-bit md5 hash of
+    f"{s}:{gram}" over its distinct grams (NULL below n tokens), and two
+    separately built plans give the same values: the salt must not come
+    from a lambda's per-plan variable name."""
+    texts = {
+        1: "a b c d e",
+        2: "x y",
+        3: "a b c a b c a b c",
+        4: "",
+        5: "the quick brown fox the quick brown fox",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id LONG, text STRING")
+
+    def signatures():
+        sets = dedup._gram_sets(docs, "doc_id", "text", 3)
+        return {
+            r["doc"]: tuple(r[f"mh_{s}"] for s in range(8))
+            for r in dedup.minhash_signatures(sets, 8).collect()
+        }
+
+    got = signatures()
+    assert signatures() == got
+    for doc, text in texts.items():
+        toks = text.split(" ")
+        grams = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+        want = tuple(
+            min((_md5_int_model(f"{s}:{g}") for g in grams), default=None)
+            for s in range(8)
+        )
+        assert got[doc] == want, doc
+
+
+def _depth(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _filters_below_round_robin(plan: str) -> list[str]:
+    """Filter nodes on a gram or token expression in the subtree of a
+    round-robin exchange (where Catalyst pushes filters into the scan)."""
+    lines = plan.splitlines()
+    found = []
+    for i, line in enumerate(lines):
+        if "RoundRobinPartitioning" not in line:
+            continue
+        for sub in lines[i + 1:]:
+            if _depth(sub) <= _depth(line):
+                break
+            node = re.sub(r"^\*\(\d+\) ", "", sub.lstrip(" :+-"))
+            if node.startswith("Filter") and ("transform(" in node or "split(" in node):
+                found.append(node)
+    return found
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, j = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            j += 1
+        bodies.append(plan[m.end():j - 1])
+    return bodies
+
+
+def test_gram_set_plans_tokenize_once_and_reuse_band_exchange(spark, tmp_path):
+    """Plan shape of minhash_lsh_pairs and contamination_flags over a
+    one-split parquet spread by a round-robin repartition (the driver's
+    ``_spread``): no ``split`` inside a lambda, no gram/token filter pushed
+    below the round-robin exchange, and both sides of the band self-join
+    read one exchange."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, " ".join(f"w{(i * j) % 7}" for j in range(i % 9 + 1))) for i in range(30)],
+        "doc_id LONG, text STRING",
+    ).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path).repartition(4)
+    mh = dedup.minhash_lsh_pairs(docs, "doc_id", "text", n=3)
+    ct = dedup.contamination_flags(docs, docs.filter("doc_id % 7 = 0"), n=3)
+    plans = {}
+    for name, df in (("minhash", mh), ("contamination", ct)):
+        df.collect()  # the executed plan, after AQE's re-planning
+        plans[name] = plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" in plan, name
+        assert not [b for b in _lambda_bodies(plan) if "split(" in b], name
+        assert not _filters_below_round_robin(plan), name
+    assert re.search(
+        r"ReusedExchange .*hashpartitioning\(band#\d+, bucket#\d+", plans["minhash"]
+    )
 
 
 def test_neardup_blocked_identical_and_prune_stats(spark):

@@ -20,7 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from opentelemetry_collector_contrib_spark.session import get_spark
+from opentelemetry_collector_contrib_spark.session import default_parallelism, get_spark
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -55,7 +55,9 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("contract-check", cores=8, shuffle_partitions=8)
+    spark = get_spark(
+        "contract-check", cores=default_parallelism(), shuffle_partitions=8
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
