@@ -10,7 +10,8 @@ Packaged per north_rule for cluster runs:
 
 On a real cluster --input points at the Iceberg/parquet pages table; in this
 sandbox --synth-pages generates the deterministic table at any scale.
-Prints one JSON line of pipeline metrics (accepted/refused/dropped/routed).
+Prints one JSON line of pipeline metrics (accepted/refused/dropped/routed);
+both modes also leave them in ``<out>/_run_report.json``.
 """
 
 from __future__ import annotations
@@ -50,8 +51,12 @@ def main() -> None:
         if not args.manifest:
             sys.exit("--incremental requires --manifest")
         done = runner.run_incremental(spark, pages, args.out, args.manifest)
+        with open(f"{args.out}/{runner.REPORT}") as f:
+            report = json.load(f)
+        assert report["conservation_ok"], "metric conservation violated"
         print(json.dumps({"mode": "incremental", "days_processed": done,
-                          "sec": round(time.perf_counter() - t0, 2)}))
+                          "sec": round(time.perf_counter() - t0, 2),
+                          "metrics": {f"{s}.{n}": v for s, n, v in report["metrics"]}}))
     else:
         res = runner.run_pipeline(spark, pages, out_dir=args.out, write=True)
         assert res.metrics.conservation_ok(), "metric conservation violated"

@@ -13,6 +13,9 @@ Because sink writes use dynamic partition overwrite keyed by the same
 partition value, re-running a partition is idempotent: resume produces
 byte-identical sinks vs an uninterrupted run (tested in
 tests/test_checkpoint.py), with no duplicates and no gaps.
+
+``write_json_atomic`` is the one commit primitive: the manifest and the
+run reports (``plans/metrics.write_report``) are both written through it.
 """
 
 from __future__ import annotations
@@ -20,6 +23,18 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` all at once: a temp file in the same
+    directory, then ``os.replace`` (filestorage's atomic commit analogue).
+    A reader sees the old file or the new one, never a torn write."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, prefix="_")
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 class Manifest:
@@ -35,14 +50,7 @@ class Manifest:
             return set(json.load(f)["done"])
 
     def mark_done(self, key: str) -> None:
-        done = self.done()
-        done.add(key)
-        d = os.path.dirname(self.path) or "."
-        os.makedirs(d, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=d)
-        with os.fdopen(fd, "w") as f:
-            json.dump({"done": sorted(done)}, f)
-        os.replace(tmp, self.path)  # atomic commit (filestorage analogue)
+        write_json_atomic(self.path, {"done": sorted(self.done() | {key})})
 
     def pending(self, all_keys: list[str]) -> list[str]:
         done = self.done()

@@ -9,17 +9,22 @@ Reference contract (SURVEY.md section 2.9):
 
 Spark design: counts are computed FROM THE SAME TAGGED PLAN that routes the
 rows (one scan, codegen'd conditional sums), not from separate ``count()``
-actions — at 100 TB a second scan per counter would double I/O. The result
-is a one-row metrics DataFrame per stage plus a conservation check:
-``accepted == refused + dropped + sum(routed per sink)``.
+actions — at 100 TB a second scan per counter would double I/O. The
+counts arrive on the driver through an ``Observation``, so the run report
+(``write_report``: the ``(stage, name, value)`` rows plus the conservation
+check ``accepted == refused + dropped + sum(routed per sink)``) is one JSON
+file written by the driver, like obsreport's in-process counters; writing
+it runs no Spark job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .checkpoint import write_json_atomic
 
 
 @dataclass
@@ -33,10 +38,6 @@ class PipelineMetrics:
 
     def get(self, stage: str, name: str) -> int:
         return self.rows.get((stage, name), 0)
-
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        data = [(s, n, v) for (s, n), v in sorted(self.rows.items())]
-        return spark.createDataFrame(data, "stage string, name string, value long")
 
     def conservation_ok(self) -> bool:
         """accepted == refused + dropped + sum(per-sink routed)."""
@@ -52,3 +53,14 @@ class PipelineMetrics:
 def routed_counts(tagged: DataFrame, route_col: str = "route") -> DataFrame:
     """Per-sink routed row counts from the tagged plan (single pass)."""
     return tagged.groupBy(route_col).agg(F.count(F.lit(1)).alias("rows"))
+
+
+def write_report(path: str, pm: PipelineMetrics, **fields) -> None:
+    """Write the run report to ``path`` atomically: the ``(stage, name,
+    value)`` rows of ``pm``, its conservation result, and the run's own
+    ``fields`` (wall seconds; days or epoch)."""
+    write_json_atomic(path, {
+        **fields,
+        "metrics": [[s, n, v] for (s, n), v in sorted(pm.rows.items())],
+        "conservation_ok": pm.conservation_ok(),
+    })

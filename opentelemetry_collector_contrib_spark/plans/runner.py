@@ -9,21 +9,26 @@ Topology reproduced:
     -> parse (router + substring/regex/json extraction, JVM-only)
     -> enrich (broadcast lookup join on domain + constant resource attrs)
     -> route tag (predicate lanes + value table + default)
-    -> [metrics: accepted/refused/dropped/routed, single tagged-plan pass]
     -> fan-out write partitionBy(route, day)      [exporters]
+       + Observation: accepted/refused/dropped/routed on the same pass
     -> per-sink spanmetrics + statsd-window aggregates [batch-processor
        semantics as grouped aggregates]
+    -> ``_run_report.json`` next to the sinks, written by the driver
+       [obsreport]
 
-Scale notes: the only shuffles are the two aggregates (both map-side
-partial); routing/fan-out is shuffle-free; the dimension join broadcasts;
+Scale notes: three shuffles — the fan-out write hash-repartitions on
+(route, day, salt) to bound the file count (``writer.write_fanout``), and
+the two aggregates (both map-side partial); the dimension join broadcasts;
 the pages scan prunes ``html`` out when the golden-text check is off.
 """
 
 from __future__ import annotations
 
+import time
+from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
@@ -37,6 +42,7 @@ from ..sinks import writer
 ROUTING_CONFIG_TABLE = {"en": "sink_en", "de": "sink_de"}
 DEFAULT_SINK = "sink_other"
 SPANMETRIC_DIMS = ["route", "domain", "severity_text"]
+REPORT = "_run_report.json"
 
 
 def routing_config() -> routing.RoutingConfig:
@@ -104,7 +110,26 @@ def _agg_pair(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     return span_m, win_m
 
 
-def _metrics_from_counts(counts: dict[str, int]) -> metrics_mod.PipelineMetrics:
+def observe_routes(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its per-route row counts riding the next action on it
+    (obsreport-style: one ``Observation``, no extra scan or job)."""
+    cfg = routing_config()
+    routes = [name for name, _ in cfg.predicate_routes] + list(
+        cfg.table.values()
+    ) + [cfg.default_sink]
+    obs = Observation()
+    return df.observe(
+        obs,
+        *[F.sum(F.when(F.col("route") == r, 1).otherwise(0)).alias(r) for r in routes],
+    ), obs
+
+
+def observed_counts(obs: Observation) -> dict[str, int]:
+    """Non-zero per-route counts of an action that has run."""
+    return {r: int(v) for r, v in obs.get.items() if v}
+
+
+def metrics_from_counts(counts: dict[str, int]) -> metrics_mod.PipelineMetrics:
     pm = metrics_mod.PipelineMetrics()
     pm.add("receiver", "accepted", sum(counts.values()))
     pm.add("receiver", "refused", counts.get("sink_refused", 0))
@@ -131,26 +156,15 @@ def run_pipeline(
     the working set (at 100 TB, persist() of the full stream is the wrong
     tool: it serializes everything into executor memory/disk; a pruned
     re-scan of 5 output columns is far cheaper and embarrassingly parallel).
+    The counts, their conservation check and the driver-timed write
+    seconds go to ``{out_dir}/_run_report.json``.
     """
     tagged = build_tagged(spark, pages)
-    cfg = routing_config()
-    route_names = [name for name, _ in cfg.predicate_routes] + list(
-        cfg.table.values()
-    ) + [cfg.default_sink]
 
     if write and out_dir:
-        from pyspark.sql import Observation
-
-        obs = Observation("route_counts")
-        observed = tagged.drop("text").observe(
-            obs,
-            *[
-                F.sum(F.when(F.col("route") == r, 1).otherwise(0)).alias(r)
-                for r in route_names
-            ],
-        )
         # sinks carry the parsed record (message == extracted text); the
         # golden `text` column is test-only and would double sink bytes.
+        observed, obs = observe_routes(tagged.drop("text"))
         # files_per_partition scales with session parallelism: with 1 the
         # clustered write runs ONE task per (route, day) — at |routes| x
         # |days| ~ 35 partitions a hot route's single writer becomes the
@@ -160,17 +174,26 @@ def run_pipeline(
         # keeping files bounded at partitions x cores/4 per run — on a
         # real cluster size this by target file bytes instead)
         fpp = max(1, spark.sparkContext.defaultParallelism // 4)
+        t0 = time.perf_counter()
         writer.write_fanout(
             observed, f"{out_dir}/sinks", files_per_partition=fpp
         )
-        counts = {r: int(v) for r, v in obs.get.items() if v}
-        pm = _metrics_from_counts(counts)
+        t1 = time.perf_counter()
+        counts = observed_counts(obs)
+        pm = metrics_from_counts(counts)
 
-        sink_rows = spark.read.parquet(f"{out_dir}/sinks")
+        # read back with the schema just written: no footer-inference job.
+        # `day` reads as the string it was written from; neither aggregate
+        # reads it.
+        sink_rows = spark.read.schema(observed.schema).parquet(f"{out_dir}/sinks")
         span_m, win_m = _agg_pair(sink_rows)
         span_m.write.mode("overwrite").parquet(f"{out_dir}/agg_spanmetrics")
         win_m.write.mode("overwrite").parquet(f"{out_dir}/agg_window")
-        writer.write_metrics(pm.to_df(spark), out_dir, "pipeline")
+        metrics_mod.write_report(
+            f"{out_dir}/{REPORT}", pm,
+            wall_s={"fanout_write": t1 - t0,
+                    "aggregate_writes": time.perf_counter() - t1},
+        )
         return PipelineResult(tagged, counts, pm, span_m, win_m)
 
     # no-write mode (tests / interactive): one cached pass, counts collect
@@ -180,7 +203,7 @@ def run_pipeline(
         r["route"]: r["rows"]
         for r in metrics_mod.routed_counts(tagged).collect()
     }
-    pm = _metrics_from_counts(counts)
+    pm = metrics_from_counts(counts)
     span_m, win_m = _agg_pair(tagged)
     if persist:
         tagged.unpersist()
@@ -201,6 +224,8 @@ def run_incremental(
     exactly the stanza offset-checkpoint pattern
     (internal/stanza/storage.go:27-72). ``fail_after`` simulates a crash
     after N partitions (for the resume test).
+    Each day's write observes its route counts; the sums over the days this
+    call wrote, and those days, go to ``{out_dir}/_run_report.json``.
     Returns the list of days processed this run.
     """
     tagged = build_tagged(spark, pages).persist(StorageLevel.MEMORY_AND_DISK)
@@ -209,10 +234,13 @@ def run_incremental(
         man = Manifest(manifest_path)
         todo = man.pending(all_days)
         done: list[str] = []
+        totals: Counter[str] = Counter()
+        write_s = 0.0
         for i, day in enumerate(todo):
             if fail_after is not None and i >= fail_after:
                 break
-            part = tagged.filter(F.col("day") == day).drop("text")
+            part, obs = observe_routes(tagged.filter(F.col("day") == day).drop("text"))
+            t0 = time.perf_counter()
             # same parallelism-scaled salt as run_pipeline; the content-
             # hash salt keeps crash/resume byte-identity AT A GIVEN
             # session width (a resume on a different core count lays the
@@ -226,8 +254,14 @@ def run_incremental(
                     1, spark.sparkContext.defaultParallelism // 4
                 ),
             )
+            write_s += time.perf_counter() - t0
             man.mark_done(day)
+            totals.update(observed_counts(obs))
             done.append(day)
+        metrics_mod.write_report(
+            f"{out_dir}/{REPORT}", metrics_from_counts(dict(totals)),
+            days=done, wall_s={"fanout_write": write_s},
+        )
         return done
     finally:
         tagged.unpersist()

@@ -6,8 +6,9 @@ logdata_to_splunk.go:41-95). In the Spark engine all sinks are table writes;
 one generic writer covers the category (SURVEY.md section 2.8).
 
 Scale design:
-  - route fan-out is ONE job: ``write.partitionBy(route, day)`` — single
-    scan of the input, Spark's shuffle-free dynamic partition write; per-sink
+  - route fan-out is ONE write: ``write.partitionBy(route, day)`` after
+    one hash shuffle on (route, day, salt) that bounds each (route, day) to
+    ``files_per_partition`` files — a single scan of the input; per-sink
     directories fall out of the partitioning, mirroring
     batchperresourceattr's per-attribute batching.
   - writes are idempotent per (route, day) partition: dynamic partition
@@ -18,8 +19,6 @@ Scale design:
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,8 +66,3 @@ def write_fanout(
 def read_sink(spark, base_path: str, sink: str, route_col: str = "route") -> DataFrame:
     """Read one sink's rows back (partition-pruned scan)."""
     return spark.read.parquet(base_path).filter(F.col(route_col) == sink)
-
-
-def write_metrics(df: DataFrame, base_path: str, stage: str) -> None:
-    """Metrics DataFrame written next to the sink (SURVEY.md section 2.9)."""
-    df.write.mode("overwrite").parquet(os.path.join(base_path, f"_metrics_{stage}"))

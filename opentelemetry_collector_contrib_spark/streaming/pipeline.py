@@ -7,6 +7,7 @@ the SAME lazy plan (parse -> enrich -> route) as a stream:
   readStream(parquet dir)  [filelog tailer analogue: new files = new data]
     -> build_tagged (identical code path as batch — plan reuse, no fork)
     -> foreachBatch fan-out write     [exporters; routing.go:133-147]
+       + one run report per epoch     [obsreport]
     -> watermarked tumbling-window aggregate [statsd flush interval,
        receiver/statsdreceiver/receiver.go:90-133, with late-data handling
        the reference lacks]
@@ -22,10 +23,12 @@ and stops — semantics identical to the unbounded run.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans import runner
+from ..plans import metrics, runner
 from ..schema import PAGES_SCHEMA
 from ..sinks import writer
 
@@ -53,12 +56,22 @@ def run_streaming_fanout(
     epoch_id with the same data and replaces its own partitions instead of
     appending duplicates (the exporterhelper queue/retry analogue).
     Readers see ``epoch`` as one more partition column under ``sinks/``.
+    Each epoch's route counts ride its write (one ``Observation``) into
+    ``{out_dir}/_run_report_epoch{id}.json``, outside ``sinks/``; a
+    replayed epoch rewrites its own report.
     """
     tagged = runner.build_tagged(spark, pages_stream(spark, in_path))
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        observed, obs = runner.observe_routes(batch_df)
+        t0 = time.perf_counter()
         writer.write_fanout(
-            batch_df, f"{out_dir}/sinks/epoch={epoch_id}", mode="overwrite"
+            observed, f"{out_dir}/sinks/epoch={epoch_id}", mode="overwrite"
+        )
+        metrics.write_report(
+            f"{out_dir}/_run_report_epoch{epoch_id}.json",
+            runner.metrics_from_counts(runner.observed_counts(obs)),
+            epoch=epoch_id, wall_s={"fanout_write": time.perf_counter() - t0},
         )
 
     q = (

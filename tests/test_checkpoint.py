@@ -4,6 +4,8 @@ analogue extension/storage/filestorage/client.go:53-84)."""
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark import synth
@@ -14,6 +16,11 @@ from opentelemetry_collector_contrib_spark.plans.checkpoint import Manifest
 def _snapshot(spark, path):
     df = spark.read.parquet(path).select("route", "day", "url", "message", "org")
     return {tuple(r) for r in df.collect()}
+
+
+def _report(out_dir):
+    with open(f"{out_dir}/{runner.REPORT}") as f:
+        return json.load(f)
 
 
 def test_manifest_atomic(tmp_path):
@@ -38,13 +45,26 @@ def test_resume_equals_uninterrupted(spark, sf_dir, tmp_path):
     man = str(tmp_path / "inc.json")
     done1 = runner.run_incremental(spark, pages, inc_dir, man, fail_after=3)
     assert len(done1) == 3
+    crashed = _report(inc_dir)
     # run 2 resumes from the manifest
     done2 = runner.run_incremental(spark, pages, inc_dir, man)
+    resumed = _report(inc_dir)
     assert sorted(done1 + done2) == sorted(set(done1 + done2))  # no repeats
     assert Manifest(man).pending(sorted(done1 + done2)) == []
 
     got = _snapshot(spark, f"{inc_dir}/sinks")
     assert got == expected  # no duplicates, no gaps, byte-identical fields
+
+    # each call reports the days it wrote; counts conserve and add up to
+    # the rows the two calls left in the sinks
+    assert (crashed["days"], resumed["days"]) == (done1, done2)
+    assert crashed["conservation_ok"] and resumed["conservation_ok"]
+    accepted = [
+        {(s, n): v for s, n, v in r["metrics"]}[("receiver", "accepted")]
+        for r in (crashed, resumed)
+    ]
+    assert min(accepted) > 0
+    assert sum(accepted) == spark.read.parquet(f"{inc_dir}/sinks").count()
 
 
 def test_rerun_partition_idempotent(spark, sf_dir, tmp_path):

@@ -4,6 +4,10 @@ Sent == Received testbed analogue)."""
 
 from __future__ import annotations
 
+import json
+
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark import synth
@@ -24,9 +28,24 @@ def _expected_route_case() -> str:
     )
 
 
-def test_e2e_counts_and_conservation(spark, duck, sf_dir, tmp_path):
+def test_e2e_counts_and_conservation(spark, duck, sf_dir, tmp_path, monkeypatch):
     pages = synth.pages_from_documents(spark, sf_dir)
-    res = runner.run_pipeline(spark, pages, out_dir=str(tmp_path), write=True)
+
+    # the batch run ships no driver-side data to Spark: a local list turned
+    # into a DataFrame or RDD goes through Python workers
+    def refuse(*_a, **_k):
+        raise AssertionError("driver data shipped to Spark during run_pipeline")
+
+    with monkeypatch.context() as m:
+        m.setattr(SparkSession, "createDataFrame", refuse)
+        m.setattr(SparkContext, "parallelize", refuse)
+        res = runner.run_pipeline(spark, pages, out_dir=str(tmp_path), write=True)
+
+    assert not (tmp_path / "_metrics_pipeline").exists()
+    report = json.loads((tmp_path / runner.REPORT).read_text())
+    assert {(s, n): v for s, n, v in report["metrics"]} == res.metrics.rows
+    assert report["conservation_ok"] is True
+    assert set(report["wall_s"]) == {"fanout_write", "aggregate_writes"}
 
     exp = {
         r[0]: r[1]

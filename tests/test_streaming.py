@@ -5,7 +5,10 @@ stateful case) drains the input deterministically."""
 
 from __future__ import annotations
 
+import glob
+import json
 import time
+from collections import Counter
 
 from pyspark.sql import functions as F
 
@@ -41,6 +44,22 @@ def test_streaming_fanout_matches_batch(spark, sf_dir, tmp_path):
         .groupBy("route").count().withColumnRenamed("count", "n").collect()
     }
     assert got == expected
+
+    # one run report per epoch, outside sinks/; refused and dropped are
+    # the refused and quarantine lanes, routed_<sink> the others
+    lanes = {"refused": "sink_refused", "dropped": "sink_quarantine"}
+    reports = []
+    for path in glob.glob(f"{out_dir}/_run_report_epoch*.json"):
+        with open(path) as f:
+            reports.append(json.load(f))
+    assert reports and all(r["conservation_ok"] for r in reports)
+    assert sorted(r["epoch"] for r in reports) == list(range(len(reports)))
+    reported: Counter = Counter()
+    for r in reports:
+        for _stage, name, v in r["metrics"]:
+            if name in lanes or name.startswith("routed_"):
+                reported[lanes.get(name, name.removeprefix("routed_"))] += v
+    assert {r: n for r, n in reported.items() if n} == expected
 
 
 def test_streaming_window_agg_append(spark, sf_dir, tmp_path):
